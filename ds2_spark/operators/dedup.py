@@ -42,14 +42,6 @@ def fingerprint(col: str = "text") -> F.Column:
     return F.md5(normalized_text(col))
 
 
-def hex_hash(col_expr: F.Column, salt: str, bits_hex: int = 12) -> F.Column:
-    """Portable 48-bit integer hash: conv(substr(md5(salt||x),1,12),16,10).
-    Identical in DuckDB as CAST('0x'||substr(md5(...),1,12) AS BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col_expr)), 1, bits_hex), 16, 10
-    ).cast("long")
-
-
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, fp, canonical_id, is_duplicate): canonical = min id per
     fingerprint group."""

@@ -28,6 +28,7 @@ from ..operators.hoc import HocResult, estimate_t, t_given_noisy
 from ..operators.longtail import lt_scores
 from ..operators.selection import select_subset
 from ..operators.votes import aggregate_votes, curate_scores, vote_epochs
+from ..sources.lineage import run_stage
 from .pipeline import rule_decisions, transcript_features
 
 
@@ -141,24 +142,18 @@ _RULE_COLS = (
 )
 
 
-def make_rules_stage(cfg: PipelineConfig, audio: DataFrame | None = None):
+def make_rules_stage(cfg: PipelineConfig):
     """The per-row rules+features stage as a pure lazy transform
     (run_stage-compatible), shared by the one-shot pipeline and the
-    incremental delta path so the two can never drift."""
+    incremental delta path so the two can never drift.
+
+    Audio sanity is JVM-only metadata computed IN PLACE on the same
+    frame (audio_sanity_exprs — the streaming twin's shape), so rules
+    is ONE scan → project → (pandas UDFs) with no exchange: a join
+    against a separate sanity table would scan clips twice and shuffle
+    the transcript payload."""
 
     def _rules_stage(c: DataFrame) -> DataFrame:
-        if audio is not None:
-            # caller supplied a separate (e.g. full-decode) sanity table:
-            # keyed join, bytes never in the shuffle
-            return rule_decisions(transcript_features(c, cfg), audio, cfg).select(
-                *_RULE_COLS
-            )
-        # Default: JVM-only metadata sanity computed IN PLACE on the same
-        # frame (audio_sanity_exprs — the streaming twin's shape). The
-        # former audio_sanity_fast(c) ⋈ features(c) form scanned clips
-        # twice and shuffled the transcript payload through the join;
-        # in-place exprs make rules ONE scan → project → (pandas UDFs)
-        # with no exchange at all — the shape that scales to 100 TB.
         from ..operators.audio import audio_sanity_exprs
 
         aud = audio_sanity_exprs(
@@ -223,7 +218,6 @@ def curation_pipeline(
     scores: DataFrame,
     cfg: PipelineConfig | None = None,
     rater: str = "rater_a",
-    audio: DataFrame | None = None,
     checkpoint_root: str | None = None,
     run_id: str = "run0",
     n_waves: int = 8,
@@ -235,56 +229,36 @@ def curation_pipeline(
     decisions: clip_id, keep, reason, final_score, lt_score where
     reason ∈ {selected, low_score, <rule reasons>}.
 
-    With checkpoint_root set, the heavy per-row stages (rules+features,
-    embedding) run through the _lineage wave-checkpoint protocol
-    (sources/lineage.py) and resume exactly after failure.
-    `waves_per_commit` is passed through to run_stage: the default
-    (None) gives one input scan per stage with stage-level resume;
-    1 gives the finest failure granularity (a crash loses at most one
-    wave) at the cost of one scan per wave.
+    The two expensive per-row stages (rules+features, embedding) are
+    materialized once each, because pool collect, lt, selection and
+    decisions all consume them. With checkpoint_root set they run
+    through the _lineage wave-checkpoint protocol (sources/lineage.py)
+    and resume exactly after failure; otherwise they are persisted.
+    `waves_per_commit` and `on_group_start` are passed through to
+    run_stage: the default (None) gives one input scan per stage with
+    stage-level resume; 1 gives the finest failure granularity (a crash
+    loses at most one wave) at the cost of one scan per wave.
+    on_group_start is called as (stage, waves) before each commit
+    group — tools/failure_drill.py counts attempted waves with it.
     """
     cfg = cfg or PipelineConfig()
 
-    _rules_stage = make_rules_stage(cfg, audio)
+    def _stage(df: DataFrame, fn, stage: str) -> DataFrame:
+        if checkpoint_root:
+            return run_stage(
+                spark, df, fn, checkpoint_root, run_id, stage,
+                n_waves=n_waves, waves_per_commit=waves_per_commit,
+                on_group_start=on_group_start,
+            )
+        return fn(df).persist()
 
-    if checkpoint_root:
-        from ..sources.lineage import run_stage
-
-        # on_group_start (if given) is called as (stage_name, waves)
-        # before each commit group — supervisor observability, used by
-        # tools/failure_drill.py to measure attempted (not just
-        # committed) waves across crash/resume cycles
-        def _hook(stage_name):
-            if on_group_start is None:
-                return None
-            return lambda grp: on_group_start(stage_name, grp)
-
-        rules = run_stage(
-            spark, clips, _rules_stage, checkpoint_root, run_id, "rules",
-            n_waves=n_waves, waves_per_commit=waves_per_commit,
-            on_group_start=_hook("rules"),
-        )
-        candidates = rules.filter(F.col("keep_rules"))
-        emb_df = run_stage(
-            spark,
-            candidates.select("clip_id", "transcript"),
-            lambda d: embed_candidates(d, cfg),
-            checkpoint_root,
-            run_id,
-            "embed",
-            n_waves=n_waves,
-            waves_per_commit=waves_per_commit,
-            on_group_start=_hook("embed"),
-        )
-    else:
-        # non-checkpointed path: persist the expensive UDF stages — the
-        # plan is consumed by several downstream actions (pool collect,
-        # lt, selection, decisions) and must not re-run langid/ppl/
-        # embed/audio per action. (The checkpointed path gets this for
-        # free: run_stage materializes each stage to parquet.)
-        rules = _rules_stage(clips).persist()
-        candidates = rules.filter(F.col("keep_rules"))
-        emb_df = embed_candidates(candidates, cfg).persist()
+    rules = _stage(clips, make_rules_stage(cfg), "rules")
+    candidates = rules.filter(F.col("keep_rules"))
+    emb_df = _stage(
+        candidates.select("clip_id", "transcript"),
+        lambda d: embed_candidates(d, cfg),
+        "embed",
+    )
     pool_emb, pool_ids = collect_pool(emb_df, cfg.knn_pool_max, cfg.seed)
 
     hoc_res, curated = calibrate_rater(spark, pool_emb, pool_ids, scores, rater, cfg)
@@ -302,9 +276,6 @@ def curation_pipeline(
     selected = select_subset(scored, budget)
 
     decisions = attach_selection(rules, selected)
-    persisted = [scored, curated]
-    if not checkpoint_root:
-        persisted += [rules, emb_df]
     return {
         "decisions": decisions,
         "rules": rules,
@@ -312,10 +283,11 @@ def curation_pipeline(
         "hoc": hoc_res,
         "budget": budget,
         "pool_size": len(pool_ids),
-        # every persist() this call created — callers that run the
-        # pipeline repeatedly in one JVM (bench warm-repeats) MUST
-        # unpersist these between runs or the 12g heap accumulates a
-        # full pipeline's worth of cached blocks per repeat (measured:
-        # 2-6x slowdown of later scans from GC pressure)
-        "_persisted": persisted,
+        # every frame this call may have cached (unpersisting one that
+        # was never cached is a no-op) — callers that run the pipeline
+        # repeatedly in one JVM (bench warm-repeats) MUST unpersist
+        # these between runs or the 12g heap accumulates a full
+        # pipeline's worth of cached blocks per repeat (measured: 2-6x
+        # slowdown of later scans from GC pressure)
+        "_persisted": [scored, curated, rules, emb_df],
     }

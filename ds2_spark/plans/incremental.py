@@ -193,9 +193,13 @@ def fit_frozen(
     cfg: PipelineConfig,
     rater: str,
     model_version: int,
+    root: str,
 ) -> tuple[FrozenCalibration, DataFrame]:
-    """Fit calibration on the candidate embeddings (bounded pool) and
-    package the frozen artifact + base drift statistics."""
+    """Fit calibration on the candidate embeddings (bounded pool),
+    package the frozen artifact + base drift statistics, save it under
+    `root` and return it re-read from disk — downstream consumes the
+    saved artifact (what a later batch will see), not the live
+    pipeline DataFrame."""
     pool_emb, pool_ids = collect_pool(emb_df, cfg.knn_pool_max, cfg.seed)
     hoc_res, curated = calibrate_rater(spark, pool_emb, pool_ids, scores, rater, cfg)
     normed = l2_normalize_rows(np.asarray(pool_emb, dtype=np.float32))
@@ -213,7 +217,9 @@ def fit_frozen(
         base_mean_cos=float((normed @ centroid).mean()),
         centroid=centroid,
     )
-    return frozen, curated
+    save_calibration(frozen, curated, root)
+    curated.unpersist()  # calibrate_rater persists it
+    return load_calibration(spark, root)
 
 
 def _per_clip_rows(
@@ -363,23 +369,21 @@ def _write_drift_metrics(
     )
 
 
-def _checkpointed_rows(
+def _batch_stages(
     spark: SparkSession,
     clips: DataFrame,
-    scores: DataFrame,
-    curated: DataFrame,
-    frozen: FrozenCalibration,
     cfg: PipelineConfig,
     root: str,
     batch_id: int,
     n_waves: int,
     waves_per_commit: int | None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(rules, emb, snapshot_rows) for one batch through the lineage
-    wave-checkpoint protocol. Per-batch stage names keep batches'
-    partition overwrites and lineage rows disjoint."""
+) -> tuple[DataFrame, DataFrame]:
+    """(rules, emb) for batch K through the lineage wave-checkpoint
+    protocol. Per-batch stage names keep batches' partition overwrites
+    and lineage rows disjoint."""
+    run_id = f"b{batch_id}"
     rules = run_stage(
-        spark, clips, make_rules_stage(cfg), root, f"b{batch_id}",
+        spark, clips, make_rules_stage(cfg), root, run_id,
         f"rules_b{batch_id}", n_waves=n_waves, waves_per_commit=waves_per_commit,
     )
     emb = run_stage(
@@ -387,13 +391,12 @@ def _checkpointed_rows(
         rules.filter(F.col("keep_rules")).select("clip_id", "transcript"),
         lambda d: embed_candidates(d, cfg),
         root,
-        f"b{batch_id}",
+        run_id,
         f"embed_b{batch_id}",
         n_waves=n_waves,
         waves_per_commit=waves_per_commit,
     )
-    rows = _per_clip_rows(rules, emb, scores, curated, frozen, cfg, batch_id)
-    return rules, emb, rows
+    return rules, emb
 
 
 def bootstrap_curation(
@@ -410,28 +413,10 @@ def bootstrap_curation(
     it to disk, write snapshot batch 0, and select. Subsequent
     batches go through incremental_update."""
     cfg = cfg or PipelineConfig()
-    rules = run_stage(
-        spark, clips, make_rules_stage(cfg), root, "b0", "rules_b0",
-        n_waves=n_waves, waves_per_commit=waves_per_commit,
+    rules, emb = _batch_stages(spark, clips, cfg, root, 0, n_waves, waves_per_commit)
+    frozen, curated = fit_frozen(
+        spark, rules, emb, scores, cfg, rater, model_version=0, root=root
     )
-    emb = run_stage(
-        spark,
-        rules.filter(F.col("keep_rules")).select("clip_id", "transcript"),
-        lambda d: embed_candidates(d, cfg),
-        root,
-        "b0",
-        "embed_b0",
-        n_waves=n_waves,
-        waves_per_commit=waves_per_commit,
-    )
-    frozen, live_curated = fit_frozen(
-        spark, rules, emb, scores, cfg, rater, model_version=0
-    )
-    save_calibration(frozen, live_curated, root)
-    live_curated.unpersist()  # calibrate_rater persists it
-    # re-read so downstream consumes the persisted artifact (what a
-    # later batch will see), not the live pipeline DataFrame
-    frozen, curated = load_calibration(spark, root)
     rows = _per_clip_rows(rules, emb, scores, curated, frozen, cfg, batch_id=0)
     write_snapshot_batch(rows, root, 0)
     snapshot = read_snapshot(spark, root)
@@ -469,10 +454,10 @@ def incremental_update(
         raise ValueError("batch_id 0 is the bootstrap; deltas start at 1")
     cfg = cfg or PipelineConfig()
     frozen, curated = load_calibration(spark, root)
-    rules, emb, rows = _checkpointed_rows(
-        spark, delta_clips, scores, curated, frozen, cfg, root,
-        batch_id, n_waves, waves_per_commit,
+    rules, emb = _batch_stages(
+        spark, delta_clips, cfg, root, batch_id, n_waves, waves_per_commit
     )
+    rows = _per_clip_rows(rules, emb, scores, curated, frozen, cfg, batch_id)
     write_snapshot_batch(rows, root, batch_id)
     drift = drift_report(rules, emb, frozen, thresholds)
     _write_drift_metrics(spark, root, batch_id, drift)
@@ -550,13 +535,10 @@ def recalibrate(
     snapshot = read_snapshot(spark, root)
     rules = _winning_stage_rows(spark, root, "rules_b", snapshot)
     emb = _winning_stage_rows(spark, root, "embed_b", snapshot)
-    frozen, live_curated = fit_frozen(
+    frozen, curated = fit_frozen(
         spark, rules, emb, scores, cfg, old_frozen.rater,
-        model_version=old_frozen.model_version + 1,
+        model_version=old_frozen.model_version + 1, root=root,
     )
-    save_calibration(frozen, live_curated, root)
-    live_curated.unpersist()
-    frozen, curated = load_calibration(spark, root)
     rows = _per_clip_rows(
         rules, emb, scores, curated, frozen, cfg, batch_id,
         src=snapshot.select("clip_id", "src_batch"),

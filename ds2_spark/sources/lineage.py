@@ -93,8 +93,8 @@ def completed_waves(spark: SparkSession, root: str, run_id: str, stage: str) -> 
     return {int(r["partition_id"]) for r in rows}
 
 
-def _wave_expr(key_col: str, n_waves: int):
-    return F.pmod(F.hash(F.col(key_col)), F.lit(n_waves)).cast("int")
+def _wave_expr(n_waves: int):
+    return F.pmod(F.hash(F.col("clip_id")), F.lit(n_waves)).cast("int")
 
 
 def run_stage(
@@ -104,19 +104,20 @@ def run_stage(
     root: str,
     run_id: str,
     stage: str,
-    key_col: str = "clip_id",
     n_waves: int = 8,
     waves_per_commit: int | None = None,
-    extra_metrics: Callable[[DataFrame], dict[str, float]] | None = None,
-    on_group_start: Callable[[list[int]], None] | None = None,
+    on_group_start: Callable[[str, list[int]], None] | None = None,
 ) -> DataFrame:
     """Process input in W checkpointed waves; resume skips completed
     waves. Returns the stage's full output DataFrame (all waves).
 
     stage_fn is called once per COMMIT GROUP (default: one group for
     all pending waves = one input scan) and may be narrow or
-    shuffling; its output must still carry `key_col` (the wave id is
+    shuffling; its output must still carry `clip_id` (the wave id is
     recomputed from it for partitioning, so shuffles are safe).
+
+    on_group_start, if given, is called as (stage, waves) before any
+    work on each commit group.
 
     Two contract rules, both ENFORCED not just documented:
       - stage_fn must not emit keys outside its input's wave group
@@ -152,9 +153,9 @@ def run_stage(
             # lost to a crash), which lineage alone cannot see — the
             # failure drill uses it to measure its rework bound for
             # real instead of assuming it
-            on_group_start(list(grp))
+            on_group_start(stage, list(grp))
         t0 = time.time()
-        win = _wave_expr(key_col, n_waves)
+        win = _wave_expr(n_waves)
         grp_in = input_df if len(grp) == n_waves else input_df.filter(win.isin(grp))
         in_obs = Observation(f"in_{uuid.uuid4().hex[:8]}")
         grp_in = grp_in.observe(
@@ -164,7 +165,7 @@ def run_stage(
                 for w in grp
             ],
         )
-        out = stage_fn(grp_in).withColumn("_wave", _wave_expr(key_col, n_waves))
+        out = stage_fn(grp_in).withColumn("_wave", _wave_expr(n_waves))
         out_obs = Observation(f"out_{uuid.uuid4().hex[:8]}")
         partial = len(grp) != n_waves
         out = out.observe(
@@ -191,7 +192,7 @@ def run_stage(
         if bad:
             raise ValueError(
                 f"stage {stage!r}: stage_fn emitted {bad} rows whose "
-                f"{key_col!r} hashes outside the commit group {sorted(grp)} "
+                f"clip_id hashes outside the commit group {sorted(grp)} "
                 f"(key rewrite / synthesized keys). The rows were NOT "
                 f"written and the group is NOT marked done — stage_fn must "
                 f"preserve input keys (see run_stage contract)."
@@ -213,12 +214,6 @@ def run_stage(
                 "input_rows": float(n_in),
                 "output_rows": float(n_out),
             }
-            if extra_metrics is not None:
-                metrics.update(
-                    extra_metrics(
-                        spark.read.parquet(out_dir).filter(F.col("_wave") == w)
-                    )
-                )
             mrows.extend((run_id, stage, w, k, float(v)) for k, v in metrics.items())
         spark.createDataFrame(mrows, METRICS_SCHEMA).write.mode("append").parquet(
             _metrics_dir(root)

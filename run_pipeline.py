@@ -37,11 +37,12 @@ def main() -> int:
     ap.add_argument("--waves", type=int, default=8)
     ap.add_argument(
         "--pcm16-alias-codecs",
-        default="flac,opus,mp3",
+        default="",
         help="comma-separated codec tags whose payloads are KNOWN to be "
-        "raw PCM16 despite the compressed tag (this sandbox's fixtures, "
-        "FIXTURES.md §1). Pass '' in production so unregistered codecs "
-        "refuse to decode instead of producing garbage features.",
+        "raw PCM16 despite the compressed tag (the generated fixtures "
+        "need flac,opus,mp3 — FIXTURES.md §1). The default, none, makes "
+        "unregistered codecs refuse to decode instead of producing "
+        "garbage features.",
     )
     ap.add_argument(
         "--warm-repeats",

@@ -169,3 +169,28 @@ def test_crash_between_stages_resumes_exact(
     counts = _lineage_counts(spark, root)
     assert counts == {"rules": N_WAVES, "embed": N_WAVES}
     assert _decisions(resumed) == expected
+
+
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+@pytest.mark.parametrize("checkpointed", [False, True], ids=["persisted", "checkpointed"])
+def test_persisted_list_releases_every_cache_entry(
+    spark, clips_df, fixture_paths, tmp_path, checkpointed
+):
+    """`_persisted` names every frame the pipeline caches: unpersisting
+    them leaves the session's cache manager no larger than before the
+    call, whichever way the per-row stages were materialized."""
+    scores = spark.read.parquet(fixture_paths["scores"])
+    kwargs = (
+        {"checkpoint_root": str(tmp_path / "ckpt"), "n_waves": N_WAVES}
+        if checkpointed
+        else {}
+    )
+    before = _cache_entries(spark)
+    res = cur.curation_pipeline(spark, clips_df, scores, SMALL, rater="rater_a", **kwargs)
+    assert _cache_entries(spark) > before
+    for df in res["_persisted"]:
+        df.unpersist()
+    assert _cache_entries(spark) <= before

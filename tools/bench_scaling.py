@@ -96,10 +96,14 @@ def submit(cpus: int, script: str, script_args: list[str], timeout: int = 2400) 
 
 
 def run_pipeline_once(cpus: int, fixture: str, tag: str) -> dict:
+    from ds2_spark.operators.audio import FIXTURE_PCM16_ALIASES
+
     return submit(cpus, "run_pipeline.py", [
         "--clips", f"{fixture}/clips.parquet",
         "--scores", f"{fixture}/scores.parquet",
         "--out", f"/tmp/ds2_scale_out_{tag}",
+        # fixture payloads are PCM16 under every codec tag (FIXTURES.md)
+        "--pcm16-alias-codecs", ",".join(FIXTURE_PCM16_ALIASES),
         *PIPE_KNOBS,
         "--warm-repeats", "1",
     ])

@@ -128,10 +128,9 @@ def worker(args) -> int:
         root=args.root,
         run_id=args.run_id,
         stage=STAGE,
-        key_col="clip_id",
         n_waves=args.waves,
         waves_per_commit=args.waves_per_commit,
-        on_group_start=lambda grp: print(
+        on_group_start=lambda st, grp: print(
             f"GROUP_START {json.dumps(grp)}", flush=True
         ),
     )
