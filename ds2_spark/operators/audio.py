@@ -17,6 +17,20 @@ container — by DEFAULT those tags REFUSE to decode
 (decoded_ok=false, the video-codec policy), and callers that know the
 payload is PCM16-by-construction (this sandbox's fixtures) opt in per
 call with ``pcm16_alias_codecs=FIXTURE_PCM16_ALIASES``.
+
+The Python-side operators share one payload front-end, which owns the
+refusal and truncation rules (audio_sanity and decode_pcm keep their
+own refusal rules; audio_codec_energy batches the fixed-width codecs
+and sends the rest through _decode_int_batch):
+
+  _decode_int_batch    exact int32 decode (codec registry + ADPCM
+                       lockstep) for the integer / transcode operators
+  _decode_float_batch  its float twin over resolve_decoders, for the
+                       float feature operators
+  _pcm16_frames        whole-frame PCM16 framing of a whole Arrow
+                       batch (one frombuffer, row owner per frame,
+                       optional per-frame energies)
+  _pack_pcm16_rows     the bytes-out repack of the PCM16 transforms
 """
 
 from __future__ import annotations
@@ -591,8 +605,10 @@ def _decode_int_batch(payloads: list, codecs: list) -> list:
     ADPCM codec decodes across-clips in lockstep, every other codec
     through the per-clip integer registry; rows that cannot decode
     (unknown codec, NULL/short/misaligned payload, codec error) come
-    back None. The single home of the quarantine rules — three
-    operators consumed drifting copies of this block before."""
+    back None. The single home of the integer quarantine rules —
+    three operators consumed drifting copies of this block before;
+    `_decode_float_batch` is its float twin and `_pcm16_frames` the
+    batch framing of raw PCM16 payloads."""
     aidx = [i for i, c in enumerate(codecs) if c == "adpcm_ima"]
     adpcm = (
         dict(zip(aidx, adpcm_decode_batch([payloads[i] for i in aidx])))
@@ -613,6 +629,61 @@ def _decode_int_batch(payloads: list, codecs: list) -> list:
         except ValueError:
             out.append(None)
     return out
+
+
+def _decode_float_batch(payloads, codecs, decoders: dict) -> Iterator:
+    """Float twin of `_decode_int_batch` for the float feature
+    operators: yields each row's float32 PCM through the per-call
+    `decoders` table (resolve_decoders), or None where the row cannot
+    decode (unknown codec, NULL payload, codec error). Lazy, so one
+    clip's samples are alive at a time; each operator keeps its own
+    minimum-length rule on what comes back."""
+    for b, codec in zip(payloads, codecs):
+        dec = decoders.get(codec)
+        pcm = None
+        if dec is not None and b is not None:
+            try:
+                pcm = dec(b)
+            except (ValueError, IndexError):
+                pass
+        yield pcm
+
+
+def _pcm16_frames(raw: list, frame_bytes: int, energy: bool = False) -> tuple:
+    """Whole-frame PCM16 framing shared by every batch-vectorized
+    PCM16 operator: NULL payloads become b'', each payload truncates
+    to whole `frame_bytes` frames (a trailing partial frame and any
+    odd byte drop), and the batch decodes with ONE frombuffer over the
+    joined truncated payloads. Returns (trunc, nframes, owner, x) in
+    row order: `owner` is each frame's row index and `x` the int64
+    samples — or, with energy=True, the per-frame energies
+    E_t = sum(|pcm16_i|) over frame_bytes // 2 samples. A row with
+    nframes == 0 decoded nothing, and the operators refuse exactly
+    those rows (audio_fingerprint keeps its own NULL rule). Derived in
+    ONE place so the operators' truncation semantics cannot drift."""
+    trunc = [
+        b"" if b is None else bytes(b[: len(b) // frame_bytes * frame_bytes])
+        for b in raw
+    ]
+    nframes = np.fromiter(
+        (len(b) // frame_bytes for b in trunc), dtype=np.int64, count=len(trunc)
+    )
+    owner = np.repeat(np.arange(len(trunc)), nframes)
+    x = np.frombuffer(b"".join(trunc), dtype="<i2").astype(np.int64)
+    if energy:
+        x = np.abs(x).reshape(-1, frame_bytes // 2).sum(axis=1)
+    return trunc, nframes, owner, x
+
+
+def _pack_pcm16_rows(y: np.ndarray, nsamp: np.ndarray, drop) -> list:
+    """Bytes-out repack shared by the PCM16 transforms: the batch's
+    output samples `y` (row-major, nsamp[r] per row) pack to int16-LE
+    once and split back into per-row payloads; rows flagged in `drop`
+    emit NULL."""
+    packed = y.astype("<i2").tobytes()
+    ends = np.cumsum(nsamp) * 2
+    starts = ends - nsamp * 2
+    return [None if d else packed[s:e] for d, s, e in zip(drop, starts, ends)]
 
 
 def audio_codec_energy(
@@ -985,17 +1056,9 @@ def audio_features(
             sil = np.zeros(n, dtype=np.float64)
             clp = np.zeros(n, dtype=np.float64)
             snr = np.zeros(n, dtype=np.float64)
-            for i, (b, sr, codec) in enumerate(
-                zip(pdf["bytes"], pdf["sr_hz"], pdf["codec"])
-            ):
-                dec = decoders.get(codec)
-                if dec is None or b is None:
-                    continue
-                try:
-                    pcm = dec(b)
-                except (ValueError, IndexError):
-                    continue
-                if len(pcm) < 2:
+            pcms = _decode_float_batch(pdf["bytes"], pdf["codec"], decoders)
+            for i, (pcm, sr) in enumerate(zip(pcms, pdf["sr_hz"])):
+                if pcm is None or len(pcm) < 2:
                     continue
                 ok[i] = True
                 zcr[i] = float(np.mean(np.signbit(pcm[1:]) != np.signbit(pcm[:-1])))
@@ -1069,42 +1132,22 @@ def audio_fingerprint(
     )
 
     def _op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fs = frame_samples
         for pdf in batches:
-            nrows = len(pdf)
             raw = list(pdf["bytes"])
+            # NULL rule is on the raw payload, not on whole frames: a
+            # payload of >= 2 bytes with no whole frame gets fp 0
             isnull = [b is None or len(b) < 2 for b in raw]
-            # truncate each payload to whole FRAMES before concatenating
-            # so every row's slice stays int16- and frame-aligned in the
-            # joined buffer (odd trailing bytes / partial frames drop)
-            trunc = [
-                b"" if nu else bytes(b[: (len(b) // (2 * fs)) * 2 * fs])
-                for nu, b in zip(isnull, raw)
-            ]
-            nframes = np.fromiter(
-                (len(b) // (2 * fs) for b in trunc), dtype=np.int64, count=nrows
-            )
-            # one decode pass + one reshape reduce over the whole batch
-            # (alignment to fs boundaries is guaranteed by construction)
-            pcm = np.abs(
-                np.frombuffer(b"".join(trunc), dtype="<i2").astype(np.int64)
-            )
-            energy = (
-                pcm.reshape(-1, fs).sum(axis=1)
-                if len(pcm)
-                else np.zeros(0, dtype=np.int64)
+            _, nframes, owner, energy = _pcm16_frames(
+                raw, 2 * frame_samples, energy=True
             )
             # vectorized delta-bit pack: local frame p >= 1 contributes
             # (E_p > E_{p-1}) << (p - 1), capped at max_bits bits
-            fp = np.zeros(nrows, dtype=np.int64)
-            total_frames = int(nframes.sum())
-            if total_frames:
-                owner = np.repeat(np.arange(nrows), nframes)
-                local = _concat_aranges(nframes)
-                rising = np.zeros(total_frames, dtype=bool)
-                rising[1:] = energy[1:] > energy[:-1]
-                sel = (local >= 1) & (local <= max_bits) & rising
-                np.add.at(fp, owner[sel], np.int64(1) << (local[sel] - 1))
+            local = _concat_aranges(nframes)
+            rising = np.zeros(len(energy), dtype=bool)
+            rising[1:] = energy[1:] > energy[:-1]
+            sel = (local >= 1) & (local <= max_bits) & rising
+            fp = np.zeros(len(pdf), dtype=np.int64)
+            np.add.at(fp, owner[sel], np.int64(1) << (local[sel] - 1))
             cols = {
                 "clip_id": pdf["clip_id"],
                 "fp": pd.array(
@@ -1246,20 +1289,8 @@ def audio_tone_probe(
     def _op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             nrows = len(pdf)
-            raw = list(pdf["bytes"])
-            isnull = np.fromiter(
-                (b is None or len(b) < 2 for b in raw), dtype=bool, count=nrows
-            )
-            trunc = [
-                b"" if nu else bytes(b[: (len(b) // 2) * 2])
-                for nu, b in zip(isnull, raw)
-            ]
-            nsamp = np.fromiter(
-                (len(b) // 2 for b in trunc), dtype=np.int64, count=nrows
-            )
-            pcm = np.frombuffer(b"".join(trunc), dtype="<i2").astype(np.int64)
+            _, nsamp, owner, pcm = _pcm16_frames(list(pdf["bytes"]), 2)
             idx = _concat_aranges(nsamp) % period
-            owner = np.repeat(np.arange(nrows), nsamp)
             cc = np.bincount(
                 owner, weights=(pcm * ctab[idx]).astype(np.float64),
                 minlength=nrows,
@@ -1268,15 +1299,16 @@ def audio_tone_probe(
                 owner, weights=(pcm * stab[idx]).astype(np.float64),
                 minlength=nrows,
             ).astype(np.int64)
+            # a refused row (nsamp == 0) sums to 0 and is never tonal
             tonal = (np.abs(cc) + np.abs(ss)) > thr * nsamp
             yield pd.DataFrame(
                 {
                     "clip_id": pdf["clip_id"],
-                    "decoded_ok": ~isnull,
+                    "decoded_ok": nsamp > 0,
                     "n_samples": nsamp.astype(np.int32),
-                    "corr_c": np.where(isnull, 0, cc),
-                    "corr_s": np.where(isnull, 0, ss),
-                    "is_tonal": tonal & ~isnull,
+                    "corr_c": cc,
+                    "corr_s": ss,
+                    "is_tonal": tonal,
                 }
             )
 
@@ -1323,17 +1355,9 @@ def audio_spectral_features(
             bwi = np.zeros(n, dtype=np.float64)
             rof = np.zeros(n, dtype=np.float64)
             fla = np.zeros(n, dtype=np.float64)
-            for i, (b, sr, codec) in enumerate(
-                zip(pdf["bytes"], pdf["sr_hz"], pdf["codec"])
-            ):
-                dec = decoders.get(codec)
-                if dec is None or b is None:
-                    continue
-                try:
-                    pcm = dec(b)
-                except (ValueError, IndexError):
-                    continue
-                if len(pcm) < 4:
+            pcms = _decode_float_batch(pdf["bytes"], pdf["codec"], decoders)
+            for i, (pcm, sr) in enumerate(zip(pcms, pdf["sr_hz"])):
+                if pcm is None or len(pcm) < 4:
                     continue
                 ok[i] = True
                 spec = np.abs(np.fft.rfft(pcm.astype(np.float64))) ** 2
@@ -1396,15 +1420,9 @@ def audio_loudness(
             peak = np.full(n, floor_db)
             rms = np.full(n, floor_db)
             dc = np.zeros(n, dtype=np.float64)
-            for i, (b, codec) in enumerate(zip(pdf["bytes"], pdf["codec"])):
-                dec = decoders.get(codec)
-                if dec is None or b is None:
-                    continue
-                try:
-                    pcm = dec(b)
-                except (ValueError, IndexError):
-                    continue
-                if len(pcm) == 0:
+            pcms = _decode_float_batch(pdf["bytes"], pdf["codec"], decoders)
+            for i, pcm in enumerate(pcms):
+                if pcm is None or len(pcm) == 0:
                     continue
                 ok[i] = True
                 p = float(np.max(np.abs(pcm)))
@@ -1453,17 +1471,9 @@ def audio_resample(
             ok = np.zeros(n, dtype=bool)
             ns = np.zeros(n, dtype=np.int32)
             out_bytes: list[bytes | None] = [None] * n
-            for i, (b, sr, codec) in enumerate(
-                zip(pdf["bytes"], pdf["sr_hz"], pdf["codec"])
-            ):
-                dec = decoders.get(codec)
-                if dec is None or b is None:
-                    continue
-                try:
-                    pcm = dec(b)
-                except (ValueError, IndexError):
-                    continue
-                if len(pcm) == 0:
+            pcms = _decode_float_batch(pdf["bytes"], pdf["codec"], decoders)
+            for i, (pcm, sr) in enumerate(zip(pcms, pdf["sr_hz"])):
+                if pcm is None or len(pcm) == 0:
                     continue
                 ok[i] = True
                 sr = max(int(sr), 1)
@@ -1500,57 +1510,35 @@ AUDIO_VAD_SCHEMA = (
 )
 
 
-def _vad_prep(raw: list, frame_samples: int) -> tuple:
-    """Whole-frame truncation shared by both VAD operators: NULL
-    payloads become b'', trailing partial frames (and any odd trailing
-    byte) are dropped. Returns (trunc list, nframes int64 array) in
-    row order — the exact inputs `_vad_spans` expects, derived in ONE
-    place so a truncation-semantics change cannot silently split the
-    two operators' 'stats columns bit-equal by construction' claim."""
-    fb = 2 * frame_samples
-    trunc = [
-        b"" if b is None else bytes(b[: (len(b) // fb) * fb]) for b in raw
-    ]
-    nframes = np.fromiter(
-        (len(b) // fb for b in trunc), dtype=np.int64, count=len(trunc)
-    )
-    return trunc, nframes
-
-
 def _vad_spans(
-    trunc: list,
     nframes: np.ndarray,
-    fs: int,
+    owner: np.ndarray,
+    energy: np.ndarray,
     energy_threshold: int,
     max_gap_frames: int,
     min_frames: int,
 ) -> tuple:
     """Batch-vectorized VAD span kernel shared by `audio_vad_segments`
-    (stats-only rows) and `audio_segment_extract` (bytes-out rows):
-    per-frame abs-sum energies over whole-frame-truncated payloads,
-    voiced-run islands (never crossing a clip edge), silence-gap
-    bridging, min-length filtering, and per-clip 0-based seg ids.
+    (stats-only rows) and `audio_segment_extract` (bytes-out rows),
+    over the per-frame energies of `_pcm16_frames(..., energy=True)`
+    — one framing for both, so their stats columns are bit-equal by
+    construction: voiced-run islands (never crossing a clip edge),
+    silence-gap bridging, min-length filtering, and per-clip 0-based
+    seg ids.
 
     Returns per-KEPT-segment arrays
       (owner_row, seg_id, start_frame, end_frame, n_frames,
        voiced_frames, energy_sum)
     with frame indices LOCAL to the owning clip; all arrays empty when
-    nothing survives. Flat NumPy passes only (one frombuffer over the
-    concatenated batch, reduceat over run boundaries, prefix-sum range
-    queries) — no per-row Python in per-sample or per-frame work.
+    nothing survives. Flat NumPy passes only (reduceat over run
+    boundaries, prefix-sum range queries) — no per-row Python in
+    per-frame work.
     """
-    nrows = len(trunc)
-    pcm = np.abs(np.frombuffer(b"".join(trunc), dtype="<i2").astype(np.int64))
-    energy = (
-        pcm.reshape(-1, fs).sum(axis=1)
-        if len(pcm)
-        else np.zeros(0, dtype=np.int64)
-    )
-    total = int(nframes.sum())
+    nrows = len(nframes)
+    total = len(energy)
     empty = np.zeros(0, dtype=np.int64)
     if not total:
         return (empty,) * 7
-    owner = np.repeat(np.arange(nrows), nframes)
     voiced = energy >= energy_threshold
     # voiced-run boundaries, never crossing a clip edge
     prev_same = np.zeros(total, dtype=bool)
@@ -1646,11 +1634,12 @@ def audio_vad_segments(
     pruned = clips.select("clip_id", "bytes")
 
     def _op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fs = frame_samples
         for pdf in batches:
-            trunc, nframes = _vad_prep(list(pdf["bytes"]), fs)
+            _, nframes, owner, energy = _pcm16_frames(
+                list(pdf["bytes"]), 2 * frame_samples, energy=True
+            )
             kown, seg, s, z, span, vf, esum = _vad_spans(
-                trunc, nframes, fs, energy_threshold, max_gap_frames,
+                nframes, owner, energy, energy_threshold, max_gap_frames,
                 min_frames,
             )
             cid = pdf["clip_id"].to_numpy()
@@ -1710,12 +1699,13 @@ def audio_segment_extract(
     pruned = clips.select("clip_id", "bytes")
 
     def _op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fs = frame_samples
-        fb = 2 * fs
+        fb = 2 * frame_samples
         for pdf in batches:
-            trunc, nframes = _vad_prep(list(pdf["bytes"]), fs)
+            trunc, nframes, owner, energy = _pcm16_frames(
+                list(pdf["bytes"]), fb, energy=True
+            )
             kown, seg, s, z, span, vf, esum = _vad_spans(
-                trunc, nframes, fs, energy_threshold, max_gap_frames,
+                nframes, owner, energy, energy_threshold, max_gap_frames,
                 min_frames,
             )
             cid = pdf["clip_id"].to_numpy()
@@ -1790,63 +1780,42 @@ def audio_trim(
         fb = 2 * fs  # bytes per frame
         for pdf in batches:
             nrows = len(pdf)
-            raw = list(pdf["bytes"])
-            isnull = np.fromiter(
-                (b is None or len(b) < fb for b in raw), dtype=bool,
-                count=nrows,
+            trunc, nframes, owner, energy = _pcm16_frames(
+                list(pdf["bytes"]), fb, energy=True
             )
-            trunc = [
-                b"" if nu else bytes(b[: (len(b) // fb) * fb])
-                for nu, b in zip(isnull, raw)
-            ]
-            nframes = np.fromiter(
-                (len(b) // fb for b in trunc), dtype=np.int64, count=nrows
-            )
-            pcm = np.abs(
-                np.frombuffer(b"".join(trunc), dtype="<i2").astype(np.int64)
-            )
-            energy = (
-                pcm.reshape(-1, fs).sum(axis=1)
-                if len(pcm)
-                else np.zeros(0, dtype=np.int64)
-            )
-            first = np.full(nrows, -1, dtype=np.int64)
+            local = _concat_aranges(nframes)
+            vidx = np.flatnonzero(energy >= energy_threshold)
+            # first/last touch only voiced frames — silence-heavy
+            # batches cost nothing here
             last = np.full(nrows, -1, dtype=np.int64)
+            np.maximum.at(last, owner[vidx], local[vidx])
+            neg = np.full(nrows, np.iinfo(np.int64).max, dtype=np.int64)
+            np.minimum.at(neg, owner[vidx], local[vidx])
+            has = last >= 0
+            first = np.where(has, neg, -1)
+            csum = np.concatenate(([0], np.cumsum(energy, dtype=np.int64)))
+            fstarts = np.concatenate(([0], np.cumsum(nframes)))[:-1]
             kept_e = np.zeros(nrows, dtype=np.int64)
-            total = int(nframes.sum())
-            if total:
-                owner = np.repeat(np.arange(nrows), nframes)
-                local = _concat_aranges(nframes)
-                vidx = np.flatnonzero(energy >= energy_threshold)
-                # first/last touch only voiced frames — silence-heavy
-                # batches cost nothing here
-                np.maximum.at(last, owner[vidx], local[vidx])
-                neg = np.full(nrows, np.iinfo(np.int64).max, dtype=np.int64)
-                np.minimum.at(neg, owner[vidx], local[vidx])
-                has = last >= 0
-                first[has] = neg[has]
-                csum = np.concatenate(([0], np.cumsum(energy, dtype=np.int64)))
-                fstarts = np.concatenate(([0], np.cumsum(nframes)))[:-1]
-                kept_e[has] = (
-                    csum[fstarts[has] + last[has] + 1]
-                    - csum[fstarts[has] + first[has]]
-                )
-            start_b = np.where(first >= 0, first * fb, 0)
-            end_b = np.where(first >= 0, (last + 1) * fb, 0)
+            kept_e[has] = (
+                csum[fstarts[has] + last[has] + 1]
+                - csum[fstarts[has] + first[has]]
+            )
+            start_b = np.where(has, first * fb, 0)
+            end_b = np.where(has, (last + 1) * fb, 0)
             out_bytes = [
-                None if (nu or f < 0) else trunc[i][f * fb : (l + 1) * fb]
-                for i, (nu, f, l) in enumerate(zip(isnull, first, last))
+                trunc[i][f * fb : (l + 1) * fb] if f >= 0 else None
+                for i, (f, l) in enumerate(zip(first, last))
             ]
             yield pd.DataFrame(
                 {
                     "clip_id": pdf["clip_id"],
-                    "decoded_ok": ~isnull,
+                    "decoded_ok": nframes > 0,
                     "n_frames": nframes.astype(np.int32),
                     "first_voiced": first.astype(np.int32),
                     "last_voiced": last.astype(np.int32),
                     "start_byte": start_b,
                     "end_byte": end_b,
-                    "kept_samples": np.where(first >= 0, (last - first + 1) * fs, 0),
+                    "kept_samples": np.where(has, (last - first + 1) * fs, 0),
                     "kept_energy": kept_e,
                     "bytes": out_bytes,
                 }
@@ -1900,48 +1869,25 @@ def audio_gain_normalize(clips: DataFrame, target_peak: int = 24000) -> DataFram
         tp = target_peak
         for pdf in batches:
             nrows = len(pdf)
-            raw = list(pdf["bytes"])
-            isnull = np.fromiter(
-                (b is None or len(b) < 2 for b in raw), dtype=bool, count=nrows
-            )
-            trunc = [
-                b"" if nu else bytes(b[: (len(b) // 2) * 2])
-                for nu, b in zip(isnull, raw)
-            ]
-            nsamp = np.fromiter(
-                (len(b) // 2 for b in trunc), dtype=np.int64, count=nrows
-            )
-            x = np.frombuffer(b"".join(trunc), dtype="<i2").astype(np.int64)
+            _, nsamp, owner, x = _pcm16_frames(list(pdf["bytes"]), 2)
             ax = np.abs(x)
             peaks = np.zeros(nrows, dtype=np.int64)
-            if len(x):
-                owner = np.repeat(np.arange(nrows), nsamp)
-                np.maximum.at(peaks, owner, ax)
+            np.maximum.at(peaks, owner, ax)
             safe = np.maximum(peaks, 1)
-            if len(x):
-                y = np.sign(x) * ((ax * tp) // safe[owner])
-                packed = y.astype("<i2").tobytes()
-                out_e = np.zeros(nrows, dtype=np.int64)
-                np.add.at(out_e, owner, np.abs(y))
-            else:
-                packed = b""
-                out_e = np.zeros(nrows, dtype=np.int64)
-            ends = np.cumsum(nsamp) * 2
-            starts = ends - nsamp * 2
-            out_bytes = [
-                None if (nu or pk == 0) else packed[s:t2]
-                for nu, pk, s, t2 in zip(isnull, peaks, starts, ends)
-            ]
+            y = np.sign(x) * ((ax * tp) // safe[owner])
+            # silent and refused rows (peak 0) have all-zero y
+            out_e = np.zeros(nrows, dtype=np.int64)
+            np.add.at(out_e, owner, np.abs(y))
             gain = np.where(peaks > 0, (tp * 1_000_000) // safe, 0)
             yield pd.DataFrame(
                 {
                     "clip_id": pdf["clip_id"],
-                    "decoded_ok": ~isnull,
+                    "decoded_ok": nsamp > 0,
                     "n_samples": nsamp,
                     "peak": peaks,
                     "gain_ppm": gain,
-                    "out_energy": np.where(peaks > 0, out_e, 0),
-                    "bytes": out_bytes,
+                    "out_energy": out_e,
+                    "bytes": _pack_pcm16_rows(y, nsamp, peaks == 0),
                 }
             )
 
@@ -1983,44 +1929,19 @@ def audio_downmix(clips: DataFrame, channels: int = 2) -> DataFrame:
     def _op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ch = channels
         for pdf in batches:
-            nrows = len(pdf)
-            raw = list(pdf["bytes"])
-            isnull = np.fromiter(
-                (b is None or len(b) < fb for b in raw), dtype=bool,
-                count=nrows,
-            )
-            trunc = [
-                b"" if nu else bytes(b[: (len(b) // fb) * fb])
-                for nu, b in zip(isnull, raw)
-            ]
-            nframes = np.fromiter(
-                (len(b) // fb for b in trunc), dtype=np.int64, count=nrows
-            )
-            x = np.frombuffer(b"".join(trunc), dtype="<i2").astype(np.int64)
-            if len(x):
-                s = x.reshape(-1, ch).sum(axis=1)
-                y = np.sign(s) * (np.abs(s) // ch)
-                np.clip(y, -32768, 32767, out=y)
-                packed = y.astype("<i2").tobytes()
-                out_e = np.zeros(nrows, dtype=np.int64)
-                owner = np.repeat(np.arange(nrows), nframes)
-                np.add.at(out_e, owner, np.abs(y))
-            else:
-                packed = b""
-                out_e = np.zeros(nrows, dtype=np.int64)
-            ends = np.cumsum(nframes) * 2
-            starts = ends - nframes * 2
-            out_bytes = [
-                None if nu else packed[s0:e0]
-                for nu, s0, e0 in zip(isnull, starts, ends)
-            ]
+            _, nframes, owner, x = _pcm16_frames(list(pdf["bytes"]), fb)
+            s = x.reshape(-1, ch).sum(axis=1)
+            y = np.sign(s) * (np.abs(s) // ch)
+            np.clip(y, -32768, 32767, out=y)
+            out_e = np.zeros(len(pdf), dtype=np.int64)
+            np.add.at(out_e, owner, np.abs(y))
             yield pd.DataFrame(
                 {
                     "clip_id": pdf["clip_id"],
-                    "decoded_ok": ~isnull,
+                    "decoded_ok": nframes > 0,
                     "n_frames": nframes,
                     "out_energy": out_e,
-                    "bytes": out_bytes,
+                    "bytes": _pack_pcm16_rows(y, nframes, nframes == 0),
                 }
             )
 
@@ -2058,43 +1979,29 @@ def audio_clipping(clips: DataFrame, threshold: int = 32760) -> DataFrame:
         thr = threshold
         for pdf in batches:
             nrows = len(pdf)
-            raw = list(pdf["bytes"])
-            isnull = np.fromiter(
-                (b is None or len(b) < 2 for b in raw), dtype=bool,
-                count=nrows,
-            )
-            trunc = [
-                b"" if nu else bytes(b[: (len(b) // 2) * 2])
-                for nu, b in zip(isnull, raw)
-            ]
-            nsamp = np.fromiter(
-                (len(b) // 2 for b in trunc), dtype=np.int64, count=nrows
-            )
-            x = np.frombuffer(b"".join(trunc), dtype="<i2").astype(np.int64)
+            _, nsamp, owner, x = _pcm16_frames(list(pdf["bytes"]), 2)
+            m = np.abs(x) >= thr
             clipped = np.zeros(nrows, dtype=np.int64)
+            np.add.at(clipped, owner, m.astype(np.int64))
             max_run = np.zeros(nrows, dtype=np.int64)
-            if len(x):
-                owner = np.repeat(np.arange(nrows), nsamp)
-                m = np.abs(x) >= thr
-                np.add.at(clipped, owner, m.astype(np.int64))
-                if m.any():
-                    # a run starts where m turns on or the clip changes
-                    prev_m = np.concatenate(([False], m[:-1]))
-                    same_owner = np.concatenate(
-                        ([False], owner[1:] == owner[:-1])
-                    )
-                    starts = m & ~(prev_m & same_owner)
-                    run_id = np.cumsum(starts) - 1  # valid where m
-                    lens = np.bincount(run_id[m])
-                    run_owner = owner[starts]
-                    np.maximum.at(max_run, run_owner, lens)
+            if m.any():
+                # a run starts where m turns on or the clip changes
+                prev_m = np.concatenate(([False], m[:-1]))
+                same_owner = np.concatenate(
+                    ([False], owner[1:] == owner[:-1])
+                )
+                starts = m & ~(prev_m & same_owner)
+                run_id = np.cumsum(starts) - 1  # valid where m
+                lens = np.bincount(run_id[m])
+                run_owner = owner[starts]
+                np.maximum.at(max_run, run_owner, lens)
             ppm = np.where(
                 nsamp > 0, clipped * 1_000_000 // np.maximum(nsamp, 1), 0
             )
             yield pd.DataFrame(
                 {
                     "clip_id": pdf["clip_id"],
-                    "decoded_ok": ~isnull,
+                    "decoded_ok": nsamp > 0,
                     "n_samples": nsamp,
                     "clipped": clipped,
                     "clip_ppm": ppm,
@@ -2141,46 +2048,23 @@ def audio_compress_dynamics(
         thr, rat = threshold, ratio
         for pdf in batches:
             nrows = len(pdf)
-            raw = list(pdf["bytes"])
-            isnull = np.fromiter(
-                (b is None or len(b) < 2 for b in raw), dtype=bool,
-                count=nrows,
-            )
-            trunc = [
-                b"" if nu else bytes(b[: (len(b) // 2) * 2])
-                for nu, b in zip(isnull, raw)
-            ]
-            nsamp = np.fromiter(
-                (len(b) // 2 for b in trunc), dtype=np.int64, count=nrows
-            )
-            x = np.frombuffer(b"".join(trunc), dtype="<i2").astype(np.int64)
+            _, nsamp, owner, x = _pcm16_frames(list(pdf["bytes"]), 2)
+            ax = np.abs(x)
+            over = ax > thr
+            mag = np.where(over, thr + (ax - thr) // rat, ax)
+            y = np.sign(x) * mag
             reduced = np.zeros(nrows, dtype=np.int64)
+            np.add.at(reduced, owner, over.astype(np.int64))
             out_e = np.zeros(nrows, dtype=np.int64)
-            if len(x):
-                ax = np.abs(x)
-                over = ax > thr
-                mag = np.where(over, thr + (ax - thr) // rat, ax)
-                y = np.sign(x) * mag
-                packed = y.astype("<i2").tobytes()
-                owner = np.repeat(np.arange(nrows), nsamp)
-                np.add.at(reduced, owner, over.astype(np.int64))
-                np.add.at(out_e, owner, mag)
-            else:
-                packed = b""
-            ends = np.cumsum(nsamp) * 2
-            starts = ends - nsamp * 2
-            out_bytes = [
-                None if nu else packed[s0:e0]
-                for nu, s0, e0 in zip(isnull, starts, ends)
-            ]
+            np.add.at(out_e, owner, mag)
             yield pd.DataFrame(
                 {
                     "clip_id": pdf["clip_id"],
-                    "decoded_ok": ~isnull,
+                    "decoded_ok": nsamp > 0,
                     "n_samples": nsamp,
                     "reduced": reduced,
                     "out_energy": out_e,
-                    "bytes": out_bytes,
+                    "bytes": _pack_pcm16_rows(y, nsamp, nsamp == 0),
                 }
             )
 
@@ -2328,20 +2212,18 @@ def audio_logmel(
             ok = np.zeros(n, dtype=bool)
             nf = np.zeros(n, dtype=np.int32)
             out: list = [None] * n
-            for i, (b, sr, codec) in enumerate(
-                zip(pdf["bytes"], pdf["sr_hz"], pdf["codec"])
-            ):
-                dec = decoders.get(codec)
-                # sr != sr: NULL ints arrive as NaN through Arrow
-                if dec is None or b is None or sr is None or sr != sr \
-                        or sr <= 0:
+            srs = pdf["sr_hz"]
+            # a row without a usable rate is never decoded (sr != sr:
+            # NULL ints arrive as NaN through Arrow)
+            payloads = [
+                None if sr is None or sr != sr or sr <= 0 else b
+                for b, sr in zip(pdf["bytes"], srs)
+            ]
+            pcms = _decode_float_batch(payloads, pdf["codec"], decoders)
+            for i, (pcm, sr) in enumerate(zip(pcms, srs)):
+                if pcm is None or len(pcm) < frame:
                     continue
-                try:
-                    pcm = dec(b).astype(np.float64)
-                except (ValueError, IndexError):
-                    continue
-                if len(pcm) < frame:
-                    continue
+                pcm = pcm.astype(np.float64)
                 if sr not in fb_cache:
                     fb_cache[sr] = mel_filterbank(n_mels, frame, int(sr))
                 frames = np.lib.stride_tricks.sliding_window_view(

@@ -54,7 +54,6 @@ def lt_scores(
     pool_emb: np.ndarray,
     pool_ids: np.ndarray,
     k: int = 10,
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """(clip_id, lt_score) for every row of `clips_emb` against the
     broadcast pool."""
@@ -66,12 +65,12 @@ def lt_scores(
         p_emb, p_ids = b.value
         for pdf in batches:
             emb = l2_normalize_rows(
-                np.array(pdf[emb_col].tolist(), dtype=np.float32)
+                np.array(pdf["embedding"].tolist(), dtype=np.float32)
             )
             ids = pdf["clip_id"].to_numpy()
             lt = lt_score_numpy(emb, p_emb, p_ids, ids, k=k)
             yield pd.DataFrame({"clip_id": pdf["clip_id"], "lt_score": lt})
 
-    return clips_emb.select("clip_id", emb_col).mapInPandas(
+    return clips_emb.select("clip_id", "embedding").mapInPandas(
         _op, schema="clip_id string, lt_score double"
     )

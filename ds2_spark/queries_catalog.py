@@ -1101,14 +1101,15 @@ def _synth_payload_np(fn):
     (`_synth_pcm16_hex` stays as the documented SQL-expression form;
     this produces BIT-IDENTICAL bytes — the oracle SQL is unchanged).
 
-    `fn(ev, i)` receives the batch's event ids as an int64 column
-    vector (k, 1) and sample indices as an int64 row vector
-    (1, max_n) and returns the sample matrix. Only nonneg dividends
-    may feed `%` (np.mod and Spark % agree there; every synthesis
-    formula in this catalog qualifies). int16-LE truncation via
-    astype('<i2') equals `_le16_hex`'s +65536 encoding for any value
-    the formulas produce. Returns a (event_id, n) -> bytes pandas_udf;
-    rows where fn returns None (via `null_every`) yield SQL NULL."""
+    `fn(ev, i, nv)` receives the batch's event ids `ev` (int64, k),
+    the sample indices `i` (int64, max_n) and the per-row sample
+    counts `nv` (int64, k), and returns the k per-row payloads. Only
+    nonneg dividends may feed `%` (np.mod and Spark % agree there;
+    every synthesis formula in this catalog qualifies). int16-LE
+    truncation via astype('<i2') equals `_le16_hex`'s +65536 encoding
+    for any value the formulas produce. Returns a (event_id, n) ->
+    bytes pandas_udf; a None payload (each formula's own NULL-every-k
+    rule) yields SQL NULL."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("binary")

@@ -32,6 +32,39 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
+def _stream_once(
+    spark: SparkSession,
+    schema,
+    dirs: list,
+    build,
+    query_name: str,
+    files_per_trigger: int = 2,
+    mode: str = "append",
+) -> DataFrame:
+    """The local smoke-test drain every ``run_*_once`` shares: read
+    each of `dirs` as a parquet file stream (`files_per_trigger` files
+    per micro-batch), build the plan with ``build(*streams)``, run it
+    into a memory sink named `query_name` in output `mode` until the
+    backlog is processed, stop the query, and return the sink table."""
+    streams = [
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(d)
+        for d in dirs
+    ]
+    q = (
+        build(*streams).writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(query_name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.sql(f"SELECT * FROM {query_name}")
+
+
 def windowed_event_counts(events: DataFrame, window: str = "1 hour",
                           watermark: str = "2 hours") -> DataFrame:
     """Tumbling window agg with late-data watermark; works on both a
@@ -54,23 +87,10 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour",
 def run_stream_once(spark: SparkSession, events_dir: str, query_name: str = "ev_out") -> DataFrame:
     """Drive a file-source stream to completion (one pass over the
     directory) and return the materialized result."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(events_dir)
+    return _stream_once(
+        spark, EVENTS_SCHEMA, [events_dir], windowed_event_counts,
+        query_name, files_per_trigger=4, mode="complete",
     )
-    agg = windowed_event_counts(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def running_type_stats(events: DataFrame) -> DataFrame:
@@ -116,25 +136,12 @@ def run_stateful_stream_once(
     """Drive the stateful running-stats stream over a file source one
     micro-batch per file (maxFilesPerTrigger=1 forces state to carry
     across triggers) and return the LAST update per group."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    agg = running_type_stats(stream)
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # memory sink in update mode appends every emitted update; the
     # final state per group is the row with the largest n
-    out = spark.sql(f"SELECT * FROM {query_name}")
+    out = _stream_once(
+        spark, EVENTS_SCHEMA, [events_dir], running_type_stats, query_name,
+        files_per_trigger=1, mode="update",
+    )
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy(F.desc("n"))
@@ -166,24 +173,16 @@ def streaming_rule_decisions(clips_stream: DataFrame, cfg=None) -> DataFrame:
     stateless per row (column exprs + Arrow pandas UDFs), so the
     identical plan runs under Structured Streaming unchanged — the
     incremental-ingest twin of plans/pipeline.rule_decisions, with
-    stream==batch equality pinned in tests."""
+    stream==batch equality pinned in tests. It IS the pipeline's
+    rules stage (plans/curation.make_rules_stage), whose audio sanity
+    rides the same frame as column expressions — a separate audio DF
+    would make rule_decisions a stream-stream left join, which
+    Structured Streaming rejects without watermark+interval machinery
+    the per-row semantics don't need."""
     from ..config import PipelineConfig
-    from ..operators.audio import audio_sanity_exprs
-    from ..plans.pipeline import rule_decisions, transcript_features
+    from ..plans.curation import make_rules_stage
 
-    cfg = cfg or PipelineConfig()
-    # audio sanity rides the SAME frame as column expressions — a
-    # separate audio DF would make rule_decisions a stream-stream
-    # left join, which Structured Streaming rejects without
-    # watermark+interval machinery the per-row semantics don't need
-    aud = audio_sanity_exprs(
-        cfg.quality.dur_tolerance, cfg.quality.pcm16_alias_codecs
-    )
-    enriched = clips_stream.withColumn("pcm_ok", aud["pcm_ok"]).withColumn(
-        "dur_ok", aud["dur_ok"]
-    )
-    feats = transcript_features(enriched, cfg, keep_cols=("pcm_ok", "dur_ok"))
-    return rule_decisions(feats, audio=None, cfg=cfg).select(
+    return make_rules_stage(cfg or PipelineConfig())(clips_stream).select(
         "clip_id", "lang", "reason", "keep_rules", "transcript_scrubbed"
     )
 
@@ -202,23 +201,10 @@ def run_codec_energy_stream_once(
     tests over a mixed-codec corpus."""
     from ..operators.audio import audio_codec_energy
 
-    stream = (
-        spark.readStream.schema(CLIPS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(clips_dir)
+    return _stream_once(
+        spark, CLIPS_STREAM_SCHEMA, [clips_dir], audio_codec_energy,
+        query_name,
     )
-    out = audio_codec_energy(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_trim_stream_once(
@@ -237,25 +223,13 @@ def run_trim_stream_once(
     clips landing in the table are edge-trimmed as they arrive."""
     from ..operators.audio import audio_trim
 
-    stream = (
-        spark.readStream.schema(CLIPS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(clips_dir)
+    return _stream_once(
+        spark, CLIPS_STREAM_SCHEMA, [clips_dir],
+        lambda s: audio_trim(
+            s, frame_samples=frame_samples, energy_threshold=energy_threshold
+        ),
+        query_name,
     )
-    out = audio_trim(
-        stream, frame_samples=frame_samples, energy_threshold=energy_threshold
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_pq_encode_stream_once(
@@ -273,23 +247,11 @@ def run_pq_encode_stream_once(
     plan runs under Structured Streaming unchanged."""
     from ..operators.pq import pq_encode
 
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(emb_dir)
+    return _stream_once(
+        spark, "vec_id long, embedding array<float>", [emb_dir],
+        lambda s: pq_encode(s, codebooks, quantize_scale=quantize_scale),
+        query_name,
     )
-    out = pq_encode(stream, codebooks, quantize_scale=quantize_scale)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_bpe_encode_stream_once(
@@ -307,23 +269,10 @@ def run_bpe_encode_stream_once(
     runs under Structured Streaming unchanged."""
     from ..operators.bpe import bpe_encode
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(docs_dir)
+    return _stream_once(
+        spark, "doc_id long, text string", [docs_dir],
+        lambda s: bpe_encode(s, merges), query_name,
     )
-    out = bpe_encode(stream, merges)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_rules_stream_once(
@@ -332,23 +281,10 @@ def run_rules_stream_once(
     """Drive the streaming quality filter over a parquet clips
     directory (micro-batched file source) to completion; append mode —
     pure per-row decisions, no state, no watermark needed."""
-    stream = (
-        spark.readStream.schema(CLIPS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(clips_dir)
+    return _stream_once(
+        spark, CLIPS_STREAM_SCHEMA, [clips_dir],
+        lambda s: streaming_rule_decisions(s, cfg), query_name,
     )
-    dec = streaming_rule_decisions(stream, cfg)
-    q = (
-        dec.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def session_event_counts(events: DataFrame, gap: str = "12 hours",
@@ -392,23 +328,11 @@ def run_session_stream_once(
     whose files are not in event-time order, pass a watermark wider
     than the replay's disorder or whole late files are (correctly)
     dropped as late data."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(events_dir)
+    return _stream_once(
+        spark, EVENTS_SCHEMA, [events_dir],
+        lambda s: session_event_counts(s, watermark=watermark), query_name,
+        mode="complete",
     )
-    agg = session_event_counts(stream, watermark=watermark)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -443,23 +367,10 @@ def run_dedup_stream_once(
     micro-batches, so replayed duplicates arrive in LATER triggers
     than their originals and must be caught by the state store, not
     by intra-batch dedup)."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(events_dir)
+    return _stream_once(
+        spark, EVENTS_SCHEMA, [events_dir],
+        lambda s: dedup_events_stream(s, watermark=watermark), query_name,
     )
-    q = (
-        dedup_events_stream(stream, watermark=watermark)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def interval_join_streams(
@@ -516,25 +427,13 @@ def run_interval_join_once(
     """Drive the stream-stream join over two file-source replays in
     multiple micro-batches (matches must form ACROSS batches from
     buffered state, not within one batch)."""
-    mk = lambda d: (  # noqa: E731
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(d)
+    return _stream_once(
+        spark, EVENTS_SCHEMA, [probes_dir, quotes_dir],
+        lambda p, q: interval_join_streams(
+            p, q, lookback=lookback, watermark=watermark
+        ),
+        query_name,
     )
-    joined = interval_join_streams(
-        mk(probes_dir), mk(quotes_dir), lookback=lookback, watermark=watermark
-    )
-    qr = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def enrich_events_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
@@ -561,23 +460,11 @@ def run_enrich_stream_once(
     spark: SparkSession, events_dir: str, dim: DataFrame,
     query_name: str = "enrich_out",
 ) -> DataFrame:
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 3)
-        .parquet(events_dir)
+    return _stream_once(
+        spark, EVENTS_SCHEMA, [events_dir],
+        lambda s: enrich_events_stream(s, dim), query_name,
+        files_per_trigger=3,
     )
-    out = enrich_events_stream(stream, dim)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def master_chain(clips: DataFrame) -> DataFrame:
@@ -607,23 +494,9 @@ def run_master_stream_once(
     bytes-in/bytes-out Arrow stages run unchanged under Structured
     Streaming (all stateless, so micro-batch boundaries cannot change
     any output byte)."""
-    stream = (
-        spark.readStream.schema(CLIPS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(clips_dir)
+    return _stream_once(
+        spark, CLIPS_STREAM_SCHEMA, [clips_dir], master_chain, query_name
     )
-    out = master_chain(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_filter_to_parquet(
@@ -677,27 +550,15 @@ def run_web_ingest_stream_once(
     from ..functions.htmltext import strip_html_col
     from ..functions.urls import url_parts
 
-    stream = (
-        spark.readStream.schema("doc_id long, url string, html string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(docs_dir)
-    )
     p = url_parts("url")
-    out = stream.select(
-        "doc_id",
-        p["valid"].alias("url_valid"),
-        p["canonical"].alias("canonical"),
-        p["domain"].alias("domain"),
-        strip_html_col("html").alias("text_clean"),
+    return _stream_once(
+        spark, "doc_id long, url string, html string", [docs_dir],
+        lambda s: s.select(
+            "doc_id",
+            p["valid"].alias("url_valid"),
+            p["canonical"].alias("canonical"),
+            p["domain"].alias("domain"),
+            strip_html_col("html").alias("text_clean"),
+        ),
+        query_name,
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")

@@ -1795,3 +1795,61 @@ def test_transcode_adpcm_odd_length_reports_even_count(spark):
     assert len(row["bytes"]) == 4 + 36 // 2
     en = audio_codec_energy(tc).collect()[0]
     assert en["n_samples"] == 36  # payload round-trips to the REPORTED count
+
+
+def test_framing_operators_refuse_a_batch_with_no_whole_frame(spark):
+    """One Arrow batch in which no row holds a whole frame (NULL, empty,
+    1 byte, and a 6-byte payload under 8-byte frames): every framing
+    operator runs its empty-decode path without raising and refuses
+    every row — decoded_ok false, NULL bytes, no VAD segments, NULL fp.
+    The one exception is the fingerprint's NULL rule, which is on the
+    raw payload: the 6-byte row has no whole frame but gets fp 0."""
+    from ds2_spark.operators.audio import (
+        audio_clipping,
+        audio_compress_dynamics,
+        audio_downmix,
+        audio_fingerprint,
+        audio_gain_normalize,
+        audio_segment_extract,
+        audio_tone_probe,
+        audio_trim,
+        audio_vad_segments,
+    )
+
+    rows = [
+        ("null", None),
+        ("empty", b""),
+        ("one_byte", b"\x7f"),
+        ("subframe", b"\x10\x00\x20\x00\x30\x00"),  # 3 samples < 1 frame
+    ]
+    # single partition: the whole input is one batch that decodes nothing
+    df = spark.createDataFrame(rows, "clip_id string, bytes binary").coalesce(1)
+    # 1-sample frames: the sub-frame row would decode, so these see
+    # only the rows that are short for every frame size
+    short = df.where("clip_id != 'subframe'")
+    fs = 4  # 8-byte frames, as is downmix over 4 channels
+
+    fp = {r["clip_id"]: r for r in audio_fingerprint(df, frame_samples=fs).collect()}
+    assert set(fp) == {c for c, _ in rows}
+    assert all(r["n_frames"] == 0 for r in fp.values())
+    assert fp["subframe"]["fp"] == 0
+    assert all(fp[c]["fp"] is None for c in ("null", "empty", "one_byte"))
+
+    for op in (audio_vad_segments, audio_segment_extract):
+        assert op(df, frame_samples=fs, energy_threshold=1).collect() == []
+
+    refusals = [
+        (audio_trim(df, frame_samples=fs, energy_threshold=1), 4),
+        (audio_downmix(df, channels=4), 4),
+        (audio_tone_probe(short), 3),
+        (audio_gain_normalize(short), 3),
+        (audio_clipping(short), 3),
+        (audio_compress_dynamics(short), 3),
+    ]
+    for out, n in refusals:
+        got = out.collect()
+        assert len(got) == n
+        for r in got:
+            assert r["decoded_ok"] is False, r
+            if "bytes" in out.columns:
+                assert r["bytes"] is None, r
